@@ -29,6 +29,7 @@ import platform
 import random
 import shlex
 import shutil
+import signal
 import statistics
 import subprocess
 import sys
@@ -547,6 +548,9 @@ def main(argv=None) -> int:
 
     work = os.path.join(root, WORK_DIR, f"run-{os.getpid()}")
     failures: list[str] = []
+    # On SIGTERM, unwind through the `finally` blocks that stop the JVM and
+    # remove the work directory.
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
 
     def log(msg: str) -> None:
         failures.append(msg.splitlines()[0][:300])
