@@ -43,7 +43,7 @@ from concurrent.futures import ThreadPoolExecutor
 # than fewer of them.  batch-sf0.1 is runnable by hand but is not registered
 # in BENCHMARK.json: it does not fit the driver's time budget.
 WORKLOADS = {
-    "batch-sf0.001": ("batch", 0.001, 6.0),
+    "batch-sf0.001": ("batch", 0.001, 4.0),
     "batch-sf0.1": ("batch", 0.1, 15.0),
     "stream-sf0.1": ("stream", 0.1, 4.0),
 }
