@@ -164,13 +164,26 @@ def pin_env(work: str, event_log: bool) -> dict[str, str]:
     return env
 
 
+def _jvm_pid(spark) -> int:
+    return spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+
+
 def jvm_peak_rss_mb(spark) -> float:
-    pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
-    with open(f"/proc/{pid}/status", encoding="ascii") as f:
+    """The driver JVM's VmHWM (peak resident set) in MB."""
+    with open(f"/proc/{_jvm_pid(spark)}/status", encoding="ascii") as f:
         for line in f:
             if line.startswith("VmHWM:"):
                 return int(line.split()[1]) / 1024
     raise RuntimeError("VmHWM missing from /proc status")
+
+
+def reset_jvm_peak_rss(spark) -> None:
+    """Collect the heap, then restart VmHWM from the current resident set, so
+    the peak measures the timed loop rather than how far G1 happened to grow
+    the heap during the concurrent warm-up."""
+    spark.sparkContext._jvm.System.gc()
+    with open(f"/proc/{_jvm_pid(spark)}/clear_refs", "w", encoding="ascii") as f:
+        f.write("5")
 
 
 def stop_spark(spark) -> None:
@@ -486,8 +499,9 @@ def measure(args, kind: str, sf: float, n_passes: int, work: str, trace: bool,
     try:
         wl = Batch(spark, sf_dir, expected, log) if kind == "batch" else Stream(spark, si, log)
         warm_ok = wl.warm_and_check()
-        setup_s = time.perf_counter() - t0
         setup_rss = jvm_peak_rss_mb(spark)
+        reset_jvm_peak_rss(spark)
+        setup_s = time.perf_counter() - t0
         if kind == "batch":
             res = wl.run(args.seed, n_passes, trace)
         else:
