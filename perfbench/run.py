@@ -41,7 +41,8 @@ from concurrent.futures import ThreadPoolExecutor
 # 4-core host).  A run makes round(--seconds / nominal) passes, at least one:
 # the work is fixed, so a slow host does the same passes more slowly rather
 # than fewer of them.  batch-sf0.1 is runnable by hand but is not registered
-# in BENCHMARK.json: it does not fit the driver's time budget.
+# in BENCHMARK.json: it does not fit the time budget of a full benchmark
+# round (perfbench/README.md).
 WORKLOADS = {
     "batch-sf0.001": ("batch", 0.001, 4.0),
     "batch-sf0.1": ("batch", 0.1, 15.0),
