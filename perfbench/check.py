@@ -19,7 +19,7 @@ def canon(rows):
 
 
 class Oracle:
-    """DuckDB over the generated parquet files, one view per table."""
+    """DuckDB over the parquet tables in `data_dir`, one view per table."""
 
     def __init__(self, data_dir: str, tables):
         self.con = duckdb.connect()

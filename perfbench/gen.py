@@ -1,14 +1,11 @@
-"""Seeded input generators for the benchmark.
+"""Seeded stream input for the benchmark.
 
-`write_tables` writes the ten tables the engine reads (same names, column
-names and parquet types as the TPC-H-ish star schema plus `events`,
-`documents` and `embeddings`) at a given scale factor.  `write_stream`
-splits the `events` table in time order into many parquet files and adds a
-seeded share of exact duplicate rows inside the streaming watermark.
-
-Everything is derived from one `numpy.random.Generator(PCG64(seed))` per
-table, so the same seed gives the same rows and, because the files are
-written by pyarrow without pandas metadata, the same bytes.
+The batch workloads read the repository's test tables as they are: byte
+copies of them live under `perfbench/data/` (see `DATA_DIR`), and the seed
+only permutes the query order.  The stream workload reads the sf0.1 `events`
+table from there and `write_stream` splits it, in time order, into many
+parquet files, adding a seeded share of exact duplicate rows inside the
+streaming watermark.  The same seed gives the same bytes.
 """
 
 from __future__ import annotations
@@ -18,177 +15,13 @@ from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-DAY_US = 86_400 * 1_000_000
-EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-WORDS = ("a agg batch big column customer data fast filter group hash join key line "
-         "merge order part query row scan slow small sort spark stream table the "
-         "value vector window").split()
-# Fixed base epoch for every table; the stream files get mtimes from it so
-# the file source's modification-time order is the time order.
-EPOCH_2024_US = 1_704_067_200 * 1_000_000
-
-
-def _ts(us: np.ndarray) -> pa.Array:
-    return pa.array(us.astype("int64"), pa.timestamp("us"))
-
-
-def _days(rng: np.random.Generator, n: int, start: str, end: str) -> pa.Array:
-    lo = np.datetime64(start, "D").astype("int64")
-    hi = np.datetime64(end, "D").astype("int64")
-    return _ts(rng.integers(lo, hi + 1, n) * DAY_US)
-
-
-def _money(rng: np.random.Generator, n: int, lo_c: int, hi_c: int) -> np.ndarray:
-    """2-decimal doubles drawn as exact cents."""
-    return rng.integers(lo_c, hi_c + 1, n) / 100.0
-
-
-def _pick(rng: np.random.Generator, values: list[str], n: int) -> pa.Array:
-    return pa.array(np.asarray(values, dtype=object)[rng.integers(0, len(values), n)], pa.string())
-
-
-def _names(prefix: str, n: int) -> pa.Array:
-    return pa.array([f"{prefix}#{k:09d}" for k in range(n)], pa.string())
-
-
-def _rows(sf: float) -> dict[str, int]:
-    return {
-        "customer": max(1, round(150_000 * sf)),
-        "supplier": max(1, round(10_000 * sf)),
-        "part": max(1, round(200_000 * sf)),
-        "orders": max(1, round(1_500_000 * sf)),
-        "lineitem": max(1, round(6_000_000 * sf)),
-        "events": max(1, round(1_000_000 * sf)),
-        "users": max(1, round(15_000 * sf)),
-        "documents": max(500, round(50_000 * sf)),
-        "embeddings": max(500, round(20_000 * sf)),
-    }
-
-
-def _events(rng: np.random.Generator, n: int, users: int) -> pa.Table:
-    # Event ids follow time order, as in a log; values are exponential with
-    # mean 50, in cents.
-    ts = EPOCH_2024_US + np.sort(rng.integers(0, 30 * DAY_US, n))
-    return pa.table({
-        "event_id": pa.array(np.arange(n, dtype="int64")),
-        "ts": _ts(ts),
-        "user_id": pa.array(rng.integers(0, users, n, dtype="int64")),
-        "event_type": _pick(rng, EVENT_TYPES, n),
-        "value": pa.array(np.round(rng.exponential(5000.0, n)) / 100.0),
-        "props": pa.array([f'{{"k": {k}}}' for k in rng.integers(0, 100, n)], pa.string()),
-    })
-
-
-def _documents(rng: np.random.Generator, n: int) -> pa.Table:
-    # 5% of documents are near-duplicates of an earlier one (same text plus a
-    # trailing token), so dedup_docs finds real clusters.
-    texts: list[str] = []
-    for i in range(n):
-        if i > 0 and rng.random() < 0.05:
-            texts.append(texts[int(rng.integers(0, i))] + " dup")
-        else:
-            texts.append(" ".join(WORDS[w] for w in rng.integers(0, len(WORDS), int(rng.integers(10, 100)))))
-    return pa.table({
-        "doc_id": pa.array(np.arange(n, dtype="int64")),
-        "text": pa.array(texts, pa.string()),
-        "lang": _pick(rng, ["de", "en", "es", "fr", "zh"], n),
-        "source": _pick(rng, [f"src{k}" for k in range(20)], n),
-        "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-    })
-
-
-def _embeddings(rng: np.random.Generator, n: int, dim: int = 64) -> pa.Table:
-    v = rng.standard_normal((n, dim)).astype("float32")
-    v /= np.linalg.norm(v, axis=1, keepdims=True)
-    return pa.table({
-        "vec_id": pa.array(np.arange(n, dtype="int64")),
-        "embedding": pa.FixedSizeListArray.from_arrays(pa.array(v.ravel()), dim).cast(pa.list_(pa.float32())),
-        "label": pa.array(rng.integers(0, 10, n, dtype="int32")),
-    })
-
-
-def make_tables(sf: float, seed: int) -> dict[str, pa.Table]:
-    n = _rows(sf)
-    rngs = {name: np.random.default_rng([seed, i]) for i, name in enumerate(
-        ["customer", "supplier", "part", "orders", "lineitem", "events", "documents", "embeddings"])}
-    r = rngs["customer"]
-    customer = pa.table({
-        "c_custkey": pa.array(np.arange(n["customer"], dtype="int64")),
-        "c_name": _names("Customer", n["customer"]),
-        "c_nationkey": pa.array(r.integers(0, 25, n["customer"], dtype="int32")),
-        "c_acctbal": pa.array(_money(r, n["customer"], -99_999, 999_999)),
-        "c_mktsegment": _pick(r, ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"], n["customer"]),
-    })
-    r = rngs["supplier"]
-    supplier = pa.table({
-        "s_suppkey": pa.array(np.arange(n["supplier"], dtype="int64")),
-        "s_name": _names("Supplier", n["supplier"]),
-        "s_nationkey": pa.array(r.integers(0, 25, n["supplier"], dtype="int32")),
-        "s_acctbal": pa.array(_money(r, n["supplier"], -99_999, 999_999)),
-    })
-    r = rngs["part"]
-    keys = np.arange(n["part"], dtype="int64")
-    adjectives = ["big", "blue", "cold", "hot", "large", "new", "old", "red"]
-    nouns = ["anvil", "bolt", "gear", "nut", "plate", "ring", "rod", "spring"]
-    part = pa.table({
-        "p_partkey": pa.array(keys),
-        "p_name": pa.array([f"{adjectives[a]} {nouns[b]}" for a, b in r.integers(0, 8, (n["part"], 2))], pa.string()),
-        "p_brand": _pick(r, [f"Brand#{k}" for k in range(1, 26)], n["part"]),
-        "p_type": _pick(r, ["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD"], n["part"]),
-        "p_size": pa.array(r.integers(1, 51, n["part"], dtype="int32")),
-        "p_retailprice": pa.array((9000 + keys % 1000) / 10.0),
-    })
-    r = rngs["orders"]
-    orders = pa.table({
-        "o_orderkey": pa.array(np.arange(n["orders"], dtype="int64")),
-        "o_custkey": pa.array(r.integers(0, n["customer"], n["orders"], dtype="int64")),
-        "o_orderstatus": _pick(r, ["F", "O", "P"], n["orders"]),
-        "o_totalprice": pa.array(_money(r, n["orders"], 100_191, 49_999_318)),
-        "o_orderdate": _days(r, n["orders"], "1995-01-01", "2001-08-01"),
-        "o_orderpriority": _pick(r, ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"], n["orders"]),
-    })
-    r = rngs["lineitem"]
-    m = n["lineitem"]
-    lineitem = pa.table({
-        "l_orderkey": pa.array(r.integers(0, n["orders"], m, dtype="int64")),
-        "l_partkey": pa.array(r.integers(0, n["part"], m, dtype="int64")),
-        "l_suppkey": pa.array(r.integers(0, n["supplier"], m, dtype="int64")),
-        "l_linenumber": pa.array(r.integers(1, 8, m, dtype="int32")),
-        "l_quantity": pa.array(r.integers(1, 51, m).astype("float64")),
-        "l_extendedprice": pa.array(_money(r, m, 90_068, 10_499_991)),
-        "l_discount": pa.array(r.integers(0, 11, m) / 100.0),
-        "l_tax": pa.array(r.integers(0, 9, m) / 100.0),
-        "l_returnflag": _pick(r, ["A", "N", "R"], m),
-        "l_linestatus": _pick(r, ["F", "O"], m),
-        "l_shipdate": _days(r, m, "1995-01-02", "2001-11-04"),
-    })
-    region = pa.table({
-        "r_regionkey": pa.array(np.arange(5, dtype="int32")),
-        "r_name": pa.array(["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]),
-    })
-    nation = pa.table({
-        "n_nationkey": pa.array(np.arange(25, dtype="int32")),
-        "n_name": pa.array([f"NATION_{k}" for k in range(25)]),
-        "n_regionkey": pa.array(np.arange(25, dtype="int32") % 5),
-    })
-    return {
-        "region": region, "nation": nation, "customer": customer, "supplier": supplier,
-        "part": part, "orders": orders, "lineitem": lineitem,
-        "events": _events(rngs["events"], n["events"], n["users"]),
-        "documents": _documents(rngs["documents"], n["documents"]),
-        "embeddings": _embeddings(rngs["embeddings"], n["embeddings"]),
-    }
-
-
-def write_tables(out_dir: str, sf: float, seed: int) -> dict[str, pa.Table]:
-    """Write `<name>.parquet` for every table into `out_dir`; returns them."""
-    os.makedirs(out_dir, exist_ok=True)
-    tables = make_tables(sf, seed)
-    for name, t in tables.items():
-        pq.write_table(t, os.path.join(out_dir, f"{name}.parquet"), compression="snappy")
-    return tables
+DATA_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
+# Fixed base for the stream files' mtimes, so the file source's
+# modification-time order is the time order.
+EPOCH_2024_S = 1_704_067_200
 
 
 @dataclass(frozen=True)
@@ -203,10 +36,11 @@ class StreamInput:
     duplicates: int
 
 
-def write_stream(out_dir: str, events: pa.Table, seed: int, files: int = 24,
+def write_stream(out_dir: str, events_path: str, seed: int, files: int = 24,
                  dup_share: float = 0.05) -> StreamInput:
-    """Split `events` (time-ordered) into `files` parquet files named
-    `events_NNNN.parquet` and add about `dup_share` exact duplicate rows.
+    """Split the events table at `events_path` (sorted by `ts`) into `files`
+    parquet files named `events_NNNN.parquet` and add about `dup_share`
+    exact duplicate rows.
 
     Each duplicate is placed right after its original, so its timestamp is
     never older than the newest row read before it: it stays inside the
@@ -215,6 +49,8 @@ def write_stream(out_dir: str, events: pa.Table, seed: int, files: int = 24,
     time order.
     """
     os.makedirs(out_dir, exist_ok=True)
+    events = pq.read_table(events_path)
+    events = events.take(pc.sort_indices(events, [("ts", "ascending"), ("event_id", "ascending")]))
     rng = np.random.default_rng([seed, 99])
     n = events.num_rows
     dup = rng.random(n) < dup_share
@@ -225,6 +61,7 @@ def write_stream(out_dir: str, events: pa.Table, seed: int, files: int = 24,
     for k in range(files):
         path = os.path.join(out_dir, f"events_{k:04d}.parquet")
         pq.write_table(rows.slice(bounds[k], bounds[k + 1] - bounds[k]), path, compression="snappy")
-        mtime = EPOCH_2024_US // 1_000_000 + k
+        mtime = EPOCH_2024_S + k
         os.utime(path, (mtime, mtime))
-    return StreamInput(out_dir, files, rows.num_rows, n, int(dup.sum()))
+    distinct = len(set(zip(events["event_id"].to_pylist(), events["ts"].to_pylist())))
+    return StreamInput(out_dir, files, rows.num_rows, distinct, int(dup.sum()))

@@ -1,6 +1,6 @@
 """Tracing overhead: traced against untraced pass time, from interleaved runs.
 
-    python3 perfbench/overhead.py --workload batch-sf0.001 --seeds 1 2 3 --seconds 12
+    python3 perfbench/overhead.py --workload batch-sf0.001 --seeds 1 2 3 --seconds 8
 
 For each seed, runs `run.py` once with `--trace 0` and once with `--trace 1`
 (alternating which goes first) and prints one JSON line with the median
@@ -30,7 +30,7 @@ def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", type=int, nargs="+", required=True)
-    ap.add_argument("--seconds", type=float, default=12)
+    ap.add_argument("--seconds", type=float, default=8)
     args = ap.parse_args()
     plain, traced = [], []
     for i, seed in enumerate(args.seeds):

@@ -2,13 +2,16 @@
 
 Run from the repository root:
 
-    python3 perfbench/run.py --workload batch-sf0.001 --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload batch-sf0.001 --seed 1 --seconds 8 --trace 0
 
-Each run generates its inputs from `--seed` under `.perfbench_work/` in the
-current directory, starts one Spark session at `local[<cores>]`, warms it up
-while checking every output, then runs the workload as a closed loop with
-one client: as many whole passes as fill `--seconds` on a quiet host (see
-`WORKLOADS`).  The last line of standard output is one JSON object:
+The batch workloads read the repository's test tables, shipped under
+`perfbench/data/`; the seed permutes the query order.  The stream workload
+splits the sf0.1 `events` table into seeded files under `.perfbench_work/`
+in the current directory.  Each run starts one Spark session at
+`local[<cores>]`, warms it up while checking every output, then runs the
+workload as a closed loop with one client: as many whole passes as fill
+`--seconds` on a quiet host (see `WORKLOADS`).  The last line of standard
+output is one JSON object:
 
     {"correct": ..., "attempted": ..., "failed": ..., "metrics": {name: {"value", "unit"}}}
 
@@ -35,21 +38,23 @@ import subprocess
 import sys
 import time
 import traceback
-from concurrent.futures import ThreadPoolExecutor
 
-# name -> (kind, scale factor, nominal seconds a pass takes on a quiet
-# 4-core host).  A run makes round(--seconds / nominal) passes, at least one:
-# the work is fixed, so a slow host does the same passes more slowly rather
-# than fewer of them.  batch-sf0.1 is runnable by hand but is not registered
-# in BENCHMARK.json: it does not fit the time budget of a full benchmark
-# round (perfbench/README.md).
+# name -> (kind, data directory under perfbench/data/, nominal seconds a
+# pass takes on a quiet 4-core host, op_s_tail percentile).  A run makes
+# round(--seconds / nominal) passes, at least one: the work is fixed, so a
+# slow host does the same passes more slowly rather than fewer of them.  The
+# tail percentile is the highest multiple of 5 with at least 10 ops beyond
+# it at `run_seconds` 8: 2 passes, so 34 batch ops and 26 stream ops.
+# batch-sf0.1 is runnable by hand with `--data-dir` but is not registered in
+# BENCHMARK.json: it does not fit the time budget of a full benchmark round
+# (perfbench/README.md).
 WORKLOADS = {
-    "batch-sf0.001": ("batch", 0.001, 4.0),
-    "batch-sf0.1": ("batch", 0.1, 15.0),
-    "stream-sf0.1": ("stream", 0.1, 4.0),
+    "batch-sf0.001": ("batch", "sf0.001", 4.0, 70),
+    "batch-sf0.1": ("batch", "sf0.1", 15.0, 40),
+    "stream-sf0.1": ("stream", "sf0.1", 4.0, 60),
 }
 DRIVER_MEM = "4g"
-TAIL_PCT = 75
+YOUNG_GEN = "1g"
 WORK_DIR = ".perfbench_work"
 
 END_TO_END = {
@@ -146,10 +151,14 @@ def pin_env(work: str, event_log: bool) -> dict[str, str]:
     os.environ["TMPDIR"] = tmp
     # Without this every JVM writes its perf counters under /tmp/hsperfdata_*.
     os.environ["JAVA_TOOL_OPTIONS"] = "-XX:-UsePerfData"
+    # A fixed heap (-Xms = -Xmx) and young generation (-Xmn): otherwise G1
+    # sizes both from its measured pause times, so the JVM's peak resident
+    # set follows the host's speed and moved by 15-40% between identical runs.
+    heap = f"-Xms{DRIVER_MEM} -Xmn{YOUNG_GEN}"
     conf = {
         "spark.ui.showConsoleProgress": "false",
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
-        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -Dderby.system.home={tmp}",
+        "spark.driver.extraJavaOptions": f"{heap} -Djava.io.tmpdir={tmp} -Dderby.system.home={tmp}",
     }
     if event_log:
         log_dir = os.path.join(work, "eventlog")
@@ -162,7 +171,7 @@ def pin_env(work: str, event_log: bool) -> dict[str, str]:
         })
     os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
         f"--conf {shlex.quote(f'{k}={v}')}" for k, v in conf.items()) + " pyspark-shell"
-    return env
+    return dict(env, driver_heap=heap)
 
 
 def _jvm_pid(spark) -> int:
@@ -176,15 +185,6 @@ def jvm_peak_rss_mb(spark) -> float:
             if line.startswith("VmHWM:"):
                 return int(line.split()[1]) / 1024
     raise RuntimeError("VmHWM missing from /proc status")
-
-
-def reset_jvm_peak_rss(spark) -> None:
-    """Collect the heap, then restart VmHWM from the current resident set, so
-    the peak measures the timed loop rather than how far G1 happened to grow
-    the heap during the concurrent warm-up."""
-    spark.sparkContext._jvm.System.gc()
-    with open(f"/proc/{_jvm_pid(spark)}/clear_refs", "w", encoding="ascii") as f:
-        f.write("5")
 
 
 def stop_spark(spark) -> None:
@@ -214,7 +214,7 @@ def stop_spark(spark) -> None:
 
 
 class Batch:
-    """The 17 declared queries over one generated scale factor."""
+    """The 17 declared queries over one scale factor's tables."""
 
     def __init__(self, spark, data_dir: str, expected: dict, log):
         from engine.queries import QUERIES
@@ -237,13 +237,10 @@ class Batch:
             return traceback.format_exc()
 
     def warm_and_check(self) -> bool:
-        """Untimed warm-up: collect every query and compare with the oracle.
-        The queries run on one thread per core: the first run of each query
-        is mostly single-threaded driver work (class loading, code
-        generation, JIT), so this shortens set-up."""
-        with ThreadPoolExecutor(max_workers=int(os.environ["SPARK_GRAFT_CPUS"])) as pool:
-            whys = dict(zip(self.queries, pool.map(self._check, self.queries)))
-        for name, why in whys.items():
+        """Untimed warm-up: collect every query, one after the other, and
+        compare it with the oracle."""
+        for name in self.queries:
+            why = self._check(name)
             if why:
                 self.bad.add(name)
                 self.log(f"check failed: {name}: {why}")
@@ -292,14 +289,14 @@ class Batch:
         return {"passes": passes, "names": names}
 
 
-def batch_e2e(res: dict) -> tuple[dict, int, int, list]:
+def batch_e2e(res: dict, tail_pct: float) -> tuple[dict, int, int, list]:
     ops = [o for p in res["passes"] for o in p["ops"]]
     done = [o for o in ops if o is not None]
     failed = sum(1 for o in ops if o is None or not o["ok"])
     lat = [o["s"] for o in done]
     return ({"pass_s_p50": median([p["s"] for p in res["passes"]]),
              "op_s_p50": median(lat),
-             "op_s_tail": percentile(lat, TAIL_PCT) if lat else 0.0},
+             "op_s_tail": percentile(lat, tail_pct) if lat else 0.0},
             len(ops), failed, lat)
 
 
@@ -342,7 +339,7 @@ def batch_layers(res: dict, log_stats: dict, cpus: int) -> dict:
 
 
 class Stream:
-    """Drains the generated event files through `stream_dedup` (append mode)
+    """Drains the seeded event files through `stream_dedup` (append mode)
     and `windowed_counts` (complete mode), one after the other: one pass."""
 
     def __init__(self, spark, stream_input, log):
@@ -420,7 +417,7 @@ def _batches(p: dict) -> list:
     return p["progress"]["dedup"] + p["progress"]["counts"]
 
 
-def stream_e2e(res: dict, bad_tags: set[int]) -> tuple[dict, int, int, list]:
+def stream_e2e(res: dict, bad_tags: set[int], tail_pct: float) -> tuple[dict, int, int, list]:
     passes = [p for p in res["passes"] if p is not None]
     lat = [b.durationMs["triggerExecution"] / 1e3 for p in passes for b in _batches(p)]
     attempted = len(lat) + sum(1 for p in res["passes"] if p is None)
@@ -430,7 +427,7 @@ def stream_e2e(res: dict, bad_tags: set[int]) -> tuple[dict, int, int, list]:
             failed += len(_batches(p))
     return ({"pass_s_p50": median([p["s"] for p in passes]),
              "op_s_p50": median(lat),
-             "op_s_tail": percentile(lat, TAIL_PCT) if lat else 0.0},
+             "op_s_tail": percentile(lat, tail_pct) if lat else 0.0},
             attempted, failed, lat)
 
 
@@ -470,9 +467,9 @@ def stream_layers(res: dict) -> dict:
 # ---------------------------------------------------------------------------
 
 
-def measure(args, kind: str, sf: float, n_passes: int, work: str, trace: bool,
-            log) -> tuple[dict, dict, dict]:
-    """Generate inputs, set up, run, check.  Returns (counts, metrics, record)."""
+def measure(args, kind: str, data_dir: str, n_passes: int, tail_pct: float, work: str,
+            trace: bool, log) -> tuple[dict, dict, dict]:
+    """Prepare inputs, set up, run, check.  Returns (counts, metrics, record)."""
     import gen
     from check import Oracle, windowed_analog
     from engine.queries import QUERIES
@@ -480,17 +477,15 @@ def measure(args, kind: str, sf: float, n_passes: int, work: str, trace: bool,
     from engine.tables import TABLES
 
     t_gen = time.perf_counter()
-    data_dir = os.path.join(work, "data")
-    tables = gen.write_tables(data_dir, sf, args.seed)
     if kind == "batch":
         oracle = Oracle(data_dir, TABLES)
         expected = {n: oracle.expect(q.oracle) for n, q in QUERIES.items()}
         oracle.close()
         sf_dir = data_dir
     else:
-        si = gen.write_stream(os.path.join(work, "stream"), tables["events"], args.seed)
+        si = gen.write_stream(os.path.join(work, "stream"),
+                              os.path.join(data_dir, "events.parquet"), args.seed)
         sf_dir = si.dir
-    del tables
     cpus = int(os.environ["SPARK_GRAFT_CPUS"])
 
     t0 = time.perf_counter()
@@ -500,8 +495,6 @@ def measure(args, kind: str, sf: float, n_passes: int, work: str, trace: bool,
     try:
         wl = Batch(spark, sf_dir, expected, log) if kind == "batch" else Stream(spark, si, log)
         warm_ok = wl.warm_and_check()
-        setup_rss = jvm_peak_rss_mb(spark)
-        reset_jvm_peak_rss(spark)
         setup_s = time.perf_counter() - t0
         if kind == "batch":
             res = wl.run(args.seed, n_passes, trace)
@@ -511,18 +504,18 @@ def measure(args, kind: str, sf: float, n_passes: int, work: str, trace: bool,
             warm_ok = warm_ok and 0 not in bad_tags
         rss = jvm_peak_rss_mb(spark)
         record = {"inputs_s": inputs_s, "session_s": session_s, "setup_s": setup_s,
-                  "setup_peak_rss_mb": setup_rss,
                   "pyspark": spark.version,
                   "java": spark.sparkContext._jvm.System.getProperty("java.version")}
     finally:
         stop_spark(spark)
 
     if kind == "batch":
-        e2e, attempted, failed, lat = batch_e2e(res)
+        e2e, attempted, failed, lat = batch_e2e(res, tail_pct)
     else:
-        e2e, attempted, failed, lat = stream_e2e(res, bad_tags)
+        e2e, attempted, failed, lat = stream_e2e(res, bad_tags, tail_pct)
         record.update(stream_rows=si.rows, stream_distinct=si.distinct, stream_files=si.files)
-    record.update(passes=len(res["passes"]), ops=len(lat), op_s_tail_pct=TAIL_PCT,
+    record.update(passes=len(res["passes"]), pass_s=[p["s"] for p in res["passes"] if p],
+                  ops=len(lat), op_s_tail_pct=tail_pct,
                   ops_beyond_tail=sum(1 for x in lat if x > e2e["op_s_tail"]))
     counts = {"correct": warm_ok and failed == 0, "attempted": attempted, "failed": failed}
 
@@ -547,9 +540,11 @@ def main(argv=None) -> int:
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
+    ap.add_argument("--data-dir", help="directory of the workload's parquet tables "
+                    "(default: perfbench/data/<sf>; batch-sf0.1 needs all ten sf0.1 tables)")
     args = ap.parse_args(argv)
     trace = bool(args.trace)
-    kind, sf, nominal_pass_s = WORKLOADS[args.workload]
+    kind, sf_name, nominal_pass_s, tail_pct = WORKLOADS[args.workload]
     n_passes = max(1, round(args.seconds / nominal_pass_s))
 
     root = os.getcwd()
@@ -559,6 +554,15 @@ def main(argv=None) -> int:
         import engine.queries  # noqa: F401  (the program under test)
     except ImportError as e:
         print(f"perfbench: cannot import the engine from {root}: {e}", file=sys.stderr)
+        return 2
+    from engine.tables import TABLES
+    from gen import DATA_DIR
+
+    data_dir = os.path.abspath(args.data_dir or os.path.join(DATA_DIR, sf_name))
+    needed = TABLES if kind == "batch" else ("events",)
+    missing = [t for t in needed if not os.path.isfile(os.path.join(data_dir, f"{t}.parquet"))]
+    if missing:
+        print(f"perfbench: {data_dir} has no {', '.join(missing)} table", file=sys.stderr)
         return 2
 
     work = os.path.join(root, WORK_DIR, f"run-{os.getpid()}")
@@ -573,7 +577,7 @@ def main(argv=None) -> int:
 
     try:
         env = pin_env(work, event_log=trace and kind == "batch")
-        counts, metrics, record = measure(args, kind, sf, n_passes, work, trace, log)
+        counts, metrics, record = measure(args, kind, data_dir, n_passes, tail_pct, work, trace, log)
     finally:
         shutil.rmtree(work, ignore_errors=True)
         try:

@@ -19,6 +19,9 @@ import gen  # noqa: E402
 import run  # noqa: E402
 
 
+EVENTS = os.path.join(gen.DATA_DIR, "sf0.1", "events.parquet")
+
+
 def _digest(d):
     h = hashlib.sha256()
     for name in sorted(os.listdir(d)):
@@ -28,32 +31,37 @@ def _digest(d):
     return h.hexdigest()
 
 
-def _generate(root, seed):
-    tables = gen.write_tables(str(root / "tables"), 0.001, seed)
-    si = gen.write_stream(str(root / "stream"), tables["events"], seed, files=6)
-    return _digest(root / "tables"), _digest(root / "stream"), (si.rows, si.distinct)
+def test_data_matches_checksums():
+    """The shipped tables are the repository's test tables, byte for byte."""
+    with open(os.path.join(gen.DATA_DIR, "SHA256SUMS")) as f:
+        sums = dict(reversed(line.split()) for line in f)
+    for rel, want in sums.items():
+        with open(os.path.join(gen.DATA_DIR, rel), "rb") as f:
+            assert hashlib.sha256(f.read()).hexdigest() == want, rel
 
 
 def test_generator_same_seed_same_bytes(tmp_path):
-    a = _generate(tmp_path / "a", 5)
-    b = _generate(tmp_path / "b", 5)
-    c = _generate(tmp_path / "c", 6)
-    assert a == b
-    assert a[0] != c[0] and a[1] != c[1]
+    def write(d, seed):
+        si = gen.write_stream(str(tmp_path / d), EVENTS, seed, files=6)
+        return _digest(tmp_path / d), si
+
+    (a, sa), (b, sb), (c, sc) = write("a", 5), write("b", 5), write("c", 6)
+    assert a == b and (sa.rows, sa.distinct) == (sb.rows, sb.distinct)
+    assert a != c and sa.duplicates != sc.duplicates
 
 
 def test_stream_split_counts(tmp_path):
     import pyarrow.parquet as pq
 
-    tables = gen.make_tables(0.001, 3)
-    si = gen.write_stream(str(tmp_path), tables["events"], 3, files=6)
+    si = gen.write_stream(str(tmp_path), EVENTS, 3, files=6)
+    events = pq.read_table(EVENTS)
     files = sorted(os.listdir(tmp_path))
     assert len(files) == si.files == 6
     rows = [pq.read_table(tmp_path / f) for f in files]
     assert sum(t.num_rows for t in rows) == si.rows == si.distinct + si.duplicates
-    assert si.distinct == tables["events"].num_rows and si.duplicates > 0
+    assert si.distinct == events.num_rows and si.duplicates > 0
     keys = [(i, t) for r in rows for i, t in zip(r["event_id"].to_pylist(), r["ts"].to_pylist())]
-    assert len(set(keys)) == si.distinct
+    assert set(keys) == set(zip(events["event_id"].to_pylist(), events["ts"].to_pylist()))
     # time order across files, and file mtimes in the same order
     assert [k[1] for k in keys] == sorted(k[1] for k in keys)
     mtimes = [os.path.getmtime(tmp_path / f) for f in files]
@@ -61,16 +69,19 @@ def test_stream_split_counts(tmp_path):
 
 
 def test_eventlog_totals_sf0001():
-    """A real log of pricing_summary and top_customers_per_nation at sf0.001."""
+    """A real log of pricing_summary and top_customers_per_nation over the
+    shipped sf0.001 tables."""
     stats = eventlog.read(os.path.join(HERE, "fixtures", "eventlog_sf0.001.jsonl"))
     assert set(stats) == {"0:pricing_summary", "0:top_customers_per_nation"}
     ps, tc = stats["0:pricing_summary"], stats["0:top_customers_per_nation"]
     assert (ps.jobs, ps.stages, ps.tasks) == (3, 3, 3)
     assert (tc.jobs, tc.stages, tc.tasks) == (11, 11, 11)
-    # scans: the parquet files each query reads, by their sizes in bytes
-    # when the log was made (lineitem; lineitem + orders + customer + nation)
-    assert ps.scan_mb * eventlog.MB == pytest.approx(113757)
-    assert tc.scan_mb * eventlog.MB == pytest.approx(113757 + 34596 + 5173 + 1509)
+    # scans: the sizes of the parquet files each query reads
+    # (lineitem; lineitem + orders + customer + nation)
+    size = {t: os.path.getsize(os.path.join(gen.DATA_DIR, "sf0.001", f"{t}.parquet"))
+            for t in ("lineitem", "orders", "customer", "nation")}
+    assert ps.scan_mb * eventlog.MB == size["lineitem"]
+    assert tc.scan_mb * eventlog.MB == sum(size.values())
     # the task totals taken straight from the TaskEnd records
     run_ms = shuffle = 0
     with open(os.path.join(HERE, "fixtures", "eventlog_sf0.001.jsonl")) as f:
