@@ -8,9 +8,10 @@ The batch workloads read the repository's test tables, shipped under
 `perfbench/data/`; the seed permutes the query order.  The stream workload
 splits the sf0.1 `events` table into seeded files under `.perfbench_work/`
 in the current directory.  Each run starts one Spark session at
-`local[<cores>]`, warms it up while checking every output, then runs the
-workload as a closed loop with one client: as many whole passes as fill
-`--seconds` on a quiet host (see `WORKLOADS`).  The last line of standard
+`local[<cores>]`, warms it up while checking every output (batch: one
+more untimed pass), then runs the workload as a closed loop with one
+client: as many whole passes as fill `--seconds` on a quiet host (see
+`WORKLOADS`).  The last line of standard
 output is one JSON object:
 
     {"correct": ..., "attempted": ..., "failed": ..., "metrics": {name: {"value", "unit"}}}
@@ -238,12 +239,18 @@ class Batch:
 
     def warm_and_check(self) -> bool:
         """Untimed warm-up: collect every query, one after the other, and
-        compare it with the oracle."""
+        compare it with the oracle; then one pass into the noop sink.  The
+        JIT compiler is still busy after the first pass, which makes the
+        next pass 10-25% slower than later ones, by an amount that varies
+        between runs (perfbench/README.md), so that pass is not timed."""
         for name in self.queries:
             why = self._check(name)
             if why:
                 self.bad.add(name)
                 self.log(f"check failed: {name}: {why}")
+        for name in self.queries:
+            if self.op("warmup", name, None) is None:
+                self.bad.add(name)
         return not self.bad
 
     def op(self, p: int, name: str, lt) -> dict | None:
