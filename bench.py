@@ -12,12 +12,10 @@ The warmup is the r09 protocol (untimed pricing_summary) -- two neutral
 synthetic replacements were measured and rejected this round; see the
 comment at the warmup below and OPTIMIZATION_r10.md.
 
-Scale-dependent settings are parameterized via env (local defaults keep the
-driver's bench comparable):
-  SPARK_GRAFT_SHUFFLE_PARTITIONS  default: max(cpus, min(4*cpus,
-                                  input_bytes // 256MB)) -- see
-                                  engine/session.py shuffle_partitions()
-  SPARK_GRAFT_DRIVER_MEM          default 64g (local mode = driver only)
+The session is engine/session.py build_session: shuffle partitions derive
+from the core count and input size (shuffle_partitions()), and the one env
+setting is the driver heap, SPARK_GRAFT_DRIVER_MEM (default 64g; local mode
+= driver only).
 """
 
 from __future__ import annotations

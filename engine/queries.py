@@ -62,7 +62,7 @@ def _epoch_s_trunc_hour(col: str):
 @dataclass(frozen=True)
 class Query:
     fn: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # DuckDB SQL over pre-registered views, or None
+    oracle: str  # DuckDB SQL over pre-registered views
 
 
 # ---------------------------------------------------------------------------
@@ -382,27 +382,36 @@ FROM per_sess GROUP BY user_id
 """
 
 
+def behavior_code(value_c):
+    """1-byte behavior class of an event's intensity in cents: 2 surge,
+    1 active, 0 idle.  The mapping is injective, so grouping on the code
+    induces the same groups as grouping on the label (guide 2.3 narrower
+    shuffle key)."""
+    return (F.when(value_c >= 20000, F.lit(2))
+             .when(value_c >= 5000, F.lit(1))
+             .otherwise(F.lit(0))).cast("tinyint")
+
+
+def behavior_label(code):
+    """Decode a behavior_code to its label string."""
+    return (F.when(code == 2, F.lit("surge"))
+             .when(code == 1, F.lit("active"))
+             .otherwise(F.lit("idle")))
+
+
 def behavior_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rule-based behavior classification (reference cf_* analog): each event is
     classified by intensity; per (day, event_type, behavior) confidence stats."""
     ev = _events_cents(spark, sf_dir)
-    # Group on a 1-byte behavior code and decode to the label string only on
-    # the few grouped output rows (guide 2.3 narrower shuffle key; the CASE
-    # mapping is injective so the groups are identical).
-    behavior_code = (F.when(F.col("value_c") >= 20000, F.lit(2))
-                      .when(F.col("value_c") >= 5000, F.lit(1))
-                      .otherwise(F.lit(0))).cast("tinyint")
-    behavior = (F.when(F.col("behavior_c") == 2, F.lit("surge"))
-                 .when(F.col("behavior_c") == 1, F.lit("active"))
-                 .otherwise(F.lit("idle")))
     # confidence in basis points: clipped linear ramp of intensity, exact ints
     conf_bp = F.least(F.col("value_c"), F.lit(50000)).cast("long")
-    # Group on the 4-byte DATE and format only the few output rows: avoids a
-    # per-row date_format and narrows the shuffle key (guide 1.2 step 2 / 2.3).
+    # Group on the 4-byte DATE and the 1-byte behavior code, and format and
+    # decode only the few output rows: avoids a per-row date_format and
+    # narrows the shuffle key (guide 1.2 step 2 / 2.3).
     ev = ev.select(
         F.to_date("ts").alias("day_d"),
         "event_type",
-        behavior_code.alias("behavior_c"),
+        behavior_code(F.col("value_c")).alias("behavior_c"),
         conf_bp.alias("conf_bp"),
         "value_c",
     )
@@ -413,7 +422,7 @@ def behavior_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return g.select(
         F.date_format("day_d", "yyyy-MM-dd").alias("day"),
-        "event_type", behavior.alias("behavior"), "n",
+        "event_type", behavior_label(F.col("behavior_c")).alias("behavior"), "n",
         (F.col("sum_conf_bp").cast("double") / F.col("n").cast("double") / F.lit(50000.0)).alias("avg_conf"),
         (F.col("sum_value_c").cast("double") / F.col("n").cast("double") / F.lit(100.0)).alias("avg_value"),
     )
@@ -576,15 +585,20 @@ _TYPE_STATS_SQL = """
 """
 
 
-def zscore_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Feature normalization analog: per-event z-score against per-type stats."""
-    ev = _events_cents(spark, sf_dir)
+def with_zscore(ev: DataFrame) -> DataFrame:
+    """Join each event (event_type, value_c) to its type's (mu, sigma) and
+    add its z-score as column `z`."""
     # The stats side is <= |event_type| rows by construction: broadcast it
     # explicitly so the events side is never shuffled at any scale (guide 3.1).
     stats = _type_stats(ev).select("event_type", "mu", "sigma")
     j = ev.join(F.broadcast(stats), "event_type")
     z = (F.col("value_c").cast("double") / F.lit(100.0) - F.col("mu")) / F.col("sigma")
-    return j.select("event_id", "event_type", z.alias("z"))
+    return j.withColumn("z", z)
+
+
+def zscore_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Feature normalization analog: per-event z-score against per-type stats."""
+    return with_zscore(_events_cents(spark, sf_dir)).select("event_id", "event_type", "z")
 
 
 ZSCORE_SQL = f"""
@@ -601,11 +615,7 @@ FROM c JOIN stats s ON c.event_type = s.event_type
 def anomaly_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anomaly-score analog: per user, rate of events with |z| > 2.5 and the
     worst deviation."""
-    ev = _events_cents(spark, sf_dir)
-    stats = _type_stats(ev).select("event_type", "mu", "sigma")
-    j = ev.join(F.broadcast(stats), "event_type")
-    z = (F.col("value_c").cast("double") / F.lit(100.0) - F.col("mu")) / F.col("sigma")
-    j = j.select("user_id", F.abs(z).alias("abs_z"))
+    j = with_zscore(_events_cents(spark, sf_dir)).select("user_id", F.abs("z").alias("abs_z"))
     agg = j.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.when(F.col("abs_z") > 2.5, 1).otherwise(0).cast("long")).alias("n_anom"),
@@ -722,10 +732,9 @@ FROM j GROUP BY event_type
 # ---------------------------------------------------------------------------
 
 
-def dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate detection: fingerprint = md5 of the sorted first 8
-    tokens of the normalized text; keep the smallest doc_id per cluster."""
-    docs = load(spark, sf_dir, "documents", ["doc_id", "text", "n_chars"])
+def fingerprint(text):
+    """Near-duplicate fingerprint: md5 hex of the sorted first 8 whitespace
+    tokens of the lowercased text."""
     # Only the first 8 tokens matter, so extract just that prefix (the anchored
     # greedy regex stops scanning after the 8th token) instead of normalizing,
     # splitting and materializing a token array for the whole document
@@ -735,23 +744,40 @@ def dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and hence the extracted prefix -- are identical either way (including
     # conditional mappings: a final sigma stays word-final at the prefix end
     # because the regex never cuts mid-token).  Measured 1.45x on 2.7 KB docs
-    # (tools/exp_text_exprs.py); see test_lower_prefix_commutes.
-    prefix = F.lower(F.regexp_extract(F.col("text"), r"^\s*(?:\S+\s+){0,7}\S*", 0))
+    # (OPTIMIZATION_r10.md, dedup_docs); see
+    # test_dedup_fingerprint_prefix_equivalence and test_lower_prefix_commutes.
+    prefix = F.lower(F.regexp_extract(text, r"^\s*(?:\S+\s+){0,7}\S*", 0))
     toks = F.filter(F.split(prefix, r"\s+"), lambda x: x != F.lit(""))
-    fp = F.md5(F.array_join(F.sort_array(toks), " "))
+    return F.md5(F.array_join(F.sort_array(toks), " "))
+
+
+def fingerprint_key(fp):
+    """16-byte binary form of a fingerprint: the narrower shuffle key."""
+    return F.unhex(fp)
+
+
+def fingerprint_hex(key):
+    """Inverse of fingerprint_key on md5's lowercase-hex output."""
+    return F.lower(F.hex(key))
+
+
+def dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-duplicate detection: group documents by fingerprint; keep the
+    smallest doc_id per cluster."""
+    docs = load(spark, sf_dir, "documents", ["doc_id", "text", "n_chars"])
     # Shuffle the 16-byte binary digest, not the 32-char hex string, and
     # re-hex only the grouped output rows (guide 2.3 "narrower types" --
-    # the group key is most of each shuffled row here).  lower(hex(unhex(h)))
-    # is the identity on md5's lowercase-hex output, so the emitted
+    # the group key is most of each shuffled row here); the emitted
     # fingerprint is byte-identical (see test_fingerprint_hex_roundtrip).
-    d = docs.select("doc_id", F.unhex(fp).alias("fp_bin"), F.col("n_chars"))
+    d = docs.select("doc_id", fingerprint_key(fingerprint(F.col("text"))).alias("fp_bin"),
+                    F.col("n_chars"))
     g = d.groupBy("fp_bin").agg(
         F.min("doc_id").alias("survivor_id"),
         F.count(F.lit(1)).alias("cluster_size"),
         F.sum("n_chars").alias("total_chars"),
     )
     return g.select(
-        F.lower(F.hex("fp_bin")).alias("fingerprint"),
+        fingerprint_hex(F.col("fp_bin")).alias("fingerprint"),
         "survivor_id", "cluster_size", "total_chars",
     )
 
@@ -771,13 +797,18 @@ FROM d GROUP BY fingerprint
 """
 
 
+def token_count(text):
+    """Number of ' '-separated tokens, empty ones included: the value of
+    size(split(text, ' ')), i.e. #spaces + 1."""
+    # Count spaces with a char scan instead of materializing a token array
+    # per document (guide 1.2 step 2).
+    return (F.length(text) - F.length(F.replace(text, F.lit(" "), F.lit(""))) + 1).cast("long")
+
+
 def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text-pipeline stats: per (lang, source) token and char counts."""
     docs = load(spark, sf_dir, "documents", ["doc_id", "text", "lang", "source", "n_chars"])
-    # size(split(text, ' ')) == #spaces + 1; count spaces with a char scan
-    # instead of materializing a token array per document (guide 1.2 step 2).
-    toks = (F.length("text") - F.length(F.replace(F.col("text"), F.lit(" "), F.lit(""))) + 1).cast("long")
-    d = docs.select("lang", "source", toks.alias("n_tokens"), "n_chars")
+    d = docs.select("lang", "source", token_count(F.col("text")).alias("n_tokens"), "n_chars")
     g = d.groupBy("lang", "source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tokens").alias("total_tokens"),
@@ -804,15 +835,9 @@ FROM d GROUP BY 1, 2
 """
 
 
-def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vector similarity search: top-5 nearest embeddings (cosine) to each
-    label's anchor vector (the lowest vec_id of that label)."""
-    emb = load(spark, sf_dir, "embeddings", ["vec_id", "embedding", "label"])
-
-    def dot(a, b):
-        prod = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-        return F.aggregate(prod, F.lit(0.0), lambda acc, x: acc + x)
-
+def similarity_anchors(emb: DataFrame) -> DataFrame:
+    """Each label's anchor, the row with its lowest vec_id, as
+    (label, anchor_id, anchor_vec)."""
     # Anchor selection is a two-step hash path (r10): (1) min(vec_id) per
     # label over the parquet-pruned narrow (vec_id, label) columns -- a pure
     # HashAggregate -- then (2) fetch the anchor rows by broadcast-probing the
@@ -831,10 +856,21 @@ def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # column would need the broadcasts dropped in favor of shuffled joins.
     anchor_ids = (emb.select("vec_id", "label")
                      .groupBy("label").agg(F.min("vec_id").alias("anchor_id")))
-    anchors = (emb.join(F.broadcast(anchor_ids.select("anchor_id")),
-                        emb.vec_id == F.col("anchor_id"))
-                  .select("label", "anchor_id", F.col("embedding").alias("anchor_vec")))
-    anchors = anchors.select(
+    return (emb.join(F.broadcast(anchor_ids.select("anchor_id")),
+                     emb.vec_id == F.col("anchor_id"))
+               .select("label", "anchor_id", F.col("embedding").alias("anchor_vec")))
+
+
+def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Vector similarity search: top-5 nearest embeddings (cosine) to each
+    label's anchor vector (the lowest vec_id of that label)."""
+    emb = load(spark, sf_dir, "embeddings", ["vec_id", "embedding", "label"])
+
+    def dot(a, b):
+        prod = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
+        return F.aggregate(prod, F.lit(0.0), lambda acc, x: acc + x)
+
+    anchors = similarity_anchors(emb).select(
         "label", "anchor_id", "anchor_vec",
         F.sqrt(dot(F.col("anchor_vec"), F.col("anchor_vec"))).alias("anchor_norm"),
     )

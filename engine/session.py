@@ -1,8 +1,10 @@
-"""SparkSession construction for bench/tests.
+"""SparkSession construction for the bench, the tests and the tools.
 
-Scale-adaptive, parameterized via env with local defaults (guide section 9 and
-section 2.2): shuffle partitions derive from core count and input size rather
-than a constant tuned for one deployment; AQE coalesces the rest at runtime.
+The one setting read from the environment is the driver heap
+(SPARK_GRAFT_DRIVER_MEM, default 64g: in local mode the driver is the only
+JVM).  Shuffle partitions derive from core count and input size rather than
+a constant tuned for one deployment; AQE (on by default) coalesces the rest
+at runtime.  Every other setting left out is Spark's default.
 """
 
 from __future__ import annotations
@@ -22,9 +24,6 @@ def shuffle_partitions(cpus: int, sf_dir: str | None) -> int:
     post-shuffle partitions stay in the 100MB-1GB band on big inputs
     (guide section 2.2).  AQE coalescing trims the excess at runtime.
     """
-    env = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-    if env:
-        return int(env)
     n = max(2, cpus)
     if sf_dir and os.path.isdir(sf_dir):
         target = 256 * 1024 * 1024  # advisory post-shuffle partition size
@@ -35,52 +34,22 @@ def shuffle_partitions(cpus: int, sf_dir: str | None) -> int:
 def build_session(cpus: int, sf_dir: str | None = None, app_name: str = "engine"):
     from pyspark.sql import SparkSession
 
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g")
-    builder = (
+    spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", mem)
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"))
+        .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions(cpus, sf_dir)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # Scale-dependent sizing stays parameterized (local defaults keep the
-        # bench comparable): post-shuffle partition target (guide 2.2; raise
-        # toward 256m on a cluster) and scan split size (guide 6; raise toward
-        # 512m-1g for large sequential scans to cut map-task count).
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "64m"))
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"))
         .config("spark.sql.join.preferSortMergeJoin", "false")
         # Let AQE rewrite a planned sort-merge join to a shuffled hash join
         # when every post-shuffle partition's build side fits locally (guide
-        # 3.1: removes both sorts).  Default 0 = off; tying it to the advisory
-        # partition size keeps it scale-adaptive (partitions are coalesced
-        # toward that size, so a qualifying build side is ~one partition).
+        # 3.1: removes both sorts).  Spark's default 0 = off; 64m is the
+        # default advisory partition size, and partitions are coalesced
+        # toward that size, so a qualifying build side is ~one partition.
         # Inert at local SFs where these joins are broadcast anyway.
-        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-                os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP_THRESHOLD",
-                               os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "64m")))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.compression.codec", "zstd")
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
+        .getOrCreate()
     )
-    # Streaming state store: the default in-memory HDFS-backed provider keeps
-    # every in-watermark key on-heap, which is the streaming path's scale
-    # killer (guide section 5).  Production value: RocksDB
-    # (SPARK_GRAFT_STATESTORE=rocksdb); local default stays the in-memory
-    # provider so the bench/test environment is unchanged.
-    if os.environ.get("SPARK_GRAFT_STATESTORE", "").lower() == "rocksdb":
-        builder = (builder.config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-            # Changelog checkpointing uploads per-batch deltas instead of
-            # RocksDB snapshots: checkpoint cost scales with the batch's
-            # changed keys, not the total in-watermark state (the thing that
-            # is huge at the 100 TB design point).
-            .config("spark.sql.streaming.stateStore.rocksdb"
-                    ".changelogCheckpointing.enabled", "true"))
-    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from engine.queries import _cents
+
 EVENT_SCHEMA = T.StructType([
     T.StructField("event_id", T.LongType()),
     T.StructField("ts", T.TimestampType()),  # watermarks require TIMESTAMP (not NTZ)
@@ -35,12 +37,11 @@ def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def windowed_counts(events: DataFrame, window: str = "6 hours") -> DataFrame:
     """Tumbling-window per-type counts and exact value sums (cents)."""
-    value_c = F.round(F.col("value") * 100, 0).cast("long")
     return (events
             .withWatermark("ts", "1 hour")
             .groupBy(F.window("ts", window), "event_type")
             .agg(F.count(F.lit(1)).alias("n"),
-                 F.sum(value_c).alias("sum_value_c"))
+                 F.sum(_cents("value")).alias("sum_value_c"))
             .select(F.col("window.start").alias("w_start"),
                     "event_type", "n", "sum_value_c"))
 
@@ -50,17 +51,18 @@ def stream_dedup(events: DataFrame) -> DataFrame:
     watermark: a record is a duplicate only if both its id and timestamp
     repeat.  (ts must be part of the key for the watermark to bound state.)
 
-    At scale the dedup state holds every in-watermark key; run with
-    SPARK_GRAFT_STATESTORE=rocksdb (engine.session) so state lives in
-    RocksDB instead of the executor heap."""
+    At scale the dedup state holds every in-watermark key; setting
+    `spark.sql.streaming.stateStore.providerClass` to Spark's
+    RocksDBStateStoreProvider keeps it in RocksDB instead of the executor
+    heap (tests/test_streaming.py runs the dedup under both providers)."""
     return events.withWatermark("ts", "1 hour").dropDuplicates(["event_id", "ts"])
 
 
-def run_to_memory(df: DataFrame, name: str | None = None) -> str:
-    """Drive a streaming DataFrame to completion into a memory sink; returns
-    the queryable table name."""
+def run_to_memory(df: DataFrame, name: str | None = None, mode: str = "append") -> str:
+    """Drive a streaming DataFrame to completion into a memory sink in output
+    `mode` ("complete" for aggregations); returns the queryable table name."""
     name = name or f"s_{uuid.uuid4().hex[:8]}"
-    q = (df.writeStream.outputMode("append")
+    q = (df.writeStream.outputMode(mode)
          .format("memory").queryName(name).start())
     try:
         q.processAllAvailable()
@@ -70,12 +72,4 @@ def run_to_memory(df: DataFrame, name: str | None = None) -> str:
 
 
 def run_aggregation_to_memory(df: DataFrame, name: str | None = None) -> str:
-    """Like run_to_memory but for aggregations (complete mode)."""
-    name = name or f"s_{uuid.uuid4().hex[:8]}"
-    q = (df.writeStream.outputMode("complete")
-         .format("memory").queryName(name).start())
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return name
+    return run_to_memory(df, name, "complete")

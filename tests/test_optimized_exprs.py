@@ -1,13 +1,19 @@
-"""Equivalence tests for r09/r10-optimized operator internals.
+"""Equivalence tests for the optimized expressions engine.queries ships.
 
-Each optimized expression is compared in-Spark against the straightforward
-round-8 formulation it replaced, on adversarial edge cases the sf testdata
-may not cover (empty/whitespace-only text, token counts around the 8-token
-fingerprint window, runs of mixed whitespace, very long tokens).
+Each helper is compared in-Spark with a reference formulation -- the one the
+DuckDB oracle mirrors, or the straightforward one it replaced -- on
+adversarial edge cases the sf testdata may not cover (empty/whitespace-only
+text, token counts around the 8-token fingerprint window, runs of mixed
+whitespace, very long tokens, context-sensitive Unicode case mappings).
 """
+
+import math
 
 import pytest
 from pyspark.sql import functions as F
+
+from engine.queries import (behavior_code, behavior_label, fingerprint, fingerprint_hex,
+                            fingerprint_key, similarity_anchors, token_count, with_zscore)
 
 EDGE_TEXTS = [
     "",
@@ -28,45 +34,46 @@ EDGE_TEXTS = [
 ]
 
 
+# Unicode case mappings where lower() is context-sensitive or length-changing.
+UNICODE_TEXTS = [
+    "ΒΙΒΛΟΣ one two three four five six seven eight",   # Σ ends token 1
+    "one two three four five six seven ΒΙΒΛΟΣ nine",   # Σ ends token 8 (prefix end)
+    "one two three four five six seven eight ΒΙΒΛΟΣ",  # Σ beyond the prefix
+    "ΣΟΦΙΑ mid-token Σ stays non-final ΑΣΦ",
+    "İstanbul İİ ends İ",                               # U+0130 -> 2 code points
+    "STRASSE straße ẞ groß",                            # sharp s forms
+    "ΑΣ",                                               # final sigma at string end
+]
+
+
 @pytest.fixture(scope="module")
 def texts_df(spark):
     return spark.createDataFrame([(i, t) for i, t in enumerate(EDGE_TEXTS)], "id long, text string")
 
 
-def test_dedup_fingerprint_prefix_equivalence(texts_df):
-    """regexp_extract of the 8-token prefix must yield the exact fingerprint
-    of the full normalize+split+slice chain it replaced."""
+def test_dedup_fingerprint_prefix_equivalence(spark):
+    """The shipped fingerprint (lower() of the regexp-extracted 8-token
+    prefix) must equal the full normalize+split+slice chain the DuckDB oracle
+    runs, on the whitespace edge cases and the Unicode case mappings."""
+    texts = EDGE_TEXTS + UNICODE_TEXTS
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "id long, text string")
     norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-    old_fp = F.md5(F.array_join(F.sort_array(F.slice(F.split(norm, " "), 1, 8)), " "))
-
-    prefix = F.regexp_extract(F.lower(F.col("text")), r"^\s*(?:\S+\s+){0,7}\S*", 0)
-    new_fp = F.md5(F.array_join(F.sort_array(
-        F.filter(F.split(prefix, r"\s+"), lambda x: x != F.lit(""))), " "))
-
-    rows = texts_df.select("id", old_fp.alias("old"), new_fp.alias("new")).collect()
-    for r in rows:
-        assert r.old == r.new, f"fingerprint diverged for text #{r.id}: {EDGE_TEXTS[r.id]!r}"
+    chain = F.md5(F.array_join(F.sort_array(F.slice(F.split(norm, " "), 1, 8)), " "))
+    for r in df.select("id", chain.alias("old"), fingerprint(F.col("text")).alias("new")).collect():
+        assert r.old == r.new, f"fingerprint diverged for text #{r.id}: {texts[r.id]!r}"
 
 
 def test_lower_prefix_commutes(spark):
-    """lower(regexp_extract(text, RX)) must equal regexp_extract(lower(text),
-    RX): case mapping never produces or consumes whitespace, so the 8-token
-    prefix region is the same either way.  Exercises the conditional Unicode
-    mappings where lower() is context-sensitive or length-changing (Greek
-    final sigma at token/string end, Turkish dotted capital I which lowers to
-    two code points, sharp s) on top of the whitespace edge cases."""
+    """lower(regexp_extract(text, RX)) -- the order fingerprint uses -- must
+    equal regexp_extract(lower(text), RX): case mapping never produces or
+    consumes whitespace, so the 8-token prefix region is the same either way.
+    Exercises the conditional Unicode mappings where lower() is
+    context-sensitive or length-changing (Greek final sigma at token/string
+    end, Turkish dotted capital I which lowers to two code points, sharp s)
+    on top of the whitespace edge cases."""
     rx = r"^\s*(?:\S+\s+){0,7}\S*"
-    unicode_texts = [
-        "ΒΙΒΛΟΣ one two three four five six seven eight",   # Σ ends token 1
-        "one two three four five six seven ΒΙΒΛΟΣ nine",   # Σ ends token 8 (prefix end)
-        "one two three four five six seven eight ΒΙΒΛΟΣ",  # Σ beyond the prefix
-        "ΣΟΦΙΑ mid-token Σ stays non-final ΑΣΦ",
-        "İstanbul İİ ends İ",                               # U+0130 -> 2 code points
-        "STRASSE straße ẞ groß",                            # sharp s forms
-        "ΑΣ",                                               # final sigma at string end
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(EDGE_TEXTS + unicode_texts)], "id long, text string")
+    texts = EDGE_TEXTS + UNICODE_TEXTS
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "id long, text string")
     old = F.regexp_extract(F.lower(F.col("text")), rx, 0)
     new = F.lower(F.regexp_extract(F.col("text"), rx, 0))
     for r in df.select("id", old.alias("old"), new.alias("new")).collect():
@@ -74,12 +81,10 @@ def test_lower_prefix_commutes(spark):
 
 
 def test_token_count_space_arith_equivalence(texts_df):
-    """length-difference token count must equal size(split(text, ' '))
-    including empty tokens from repeated/leading/trailing spaces."""
+    """token_count must equal size(split(text, ' ')) including empty tokens
+    from repeated/leading/trailing spaces."""
     old_n = F.size(F.split(F.col("text"), " ")).cast("long")
-    new_n = (F.length("text")
-             - F.length(F.replace(F.col("text"), F.lit(" "), F.lit(""))) + 1).cast("long")
-    rows = texts_df.select("id", old_n.alias("old"), new_n.alias("new")).collect()
+    rows = texts_df.select("id", old_n.alias("old"), token_count(F.col("text")).alias("new")).collect()
     for r in rows:
         assert r.old == r.new, f"token count diverged for text #{r.id}: {EDGE_TEXTS[r.id]!r}"
 
@@ -144,68 +149,53 @@ def test_ntz_derivation_ignores_session_tz(spark):
 
 
 def test_fingerprint_hex_roundtrip(texts_df):
-    """The r10 binary-digest shuffle key must re-hex to exactly the md5 hex
-    string the query used to group on: lower(hex(unhex(h))) == h for md5
-    output (lowercase hex, fixed 32 chars)."""
-    fp = F.md5(F.col("text"))
-    rows = texts_df.select(
-        "id", fp.alias("old"),
-        F.lower(F.hex(F.unhex(fp))).alias("new"),
-    ).collect()
-    for r in rows:
+    """The binary-digest shuffle key must re-hex to exactly the fingerprint
+    string: lower(hex(unhex(h))) == h for md5 output (lowercase hex, fixed
+    32 chars)."""
+    fp = fingerprint(F.col("text"))
+    rows = texts_df.select("id", fp.alias("old"), fingerprint_hex(fingerprint_key(fp)).alias("new"))
+    for r in rows.collect():
         assert r.old == r.new, f"hex roundtrip diverged for text #{r.id}"
 
 
 def test_behavior_code_equivalence(spark):
-    """The r10 1-byte behavior code must induce exactly the same groups and
-    decode to exactly the same label as the direct CASE on value_c, across
-    the threshold boundaries."""
+    """The 1-byte behavior code must decode to exactly the label of the
+    oracle's direct CASE on value_c, across the threshold boundaries."""
     vals = [-100, 0, 1, 4999, 5000, 5001, 19999, 20000, 20001, 50000, 10**9]
     df = spark.createDataFrame([(v,) for v in vals], "value_c long")
     label = (F.when(F.col("value_c") >= 20000, F.lit("surge"))
               .when(F.col("value_c") >= 5000, F.lit("active"))
               .otherwise(F.lit("idle")))
-    code = (F.when(F.col("value_c") >= 20000, F.lit(2))
-             .when(F.col("value_c") >= 5000, F.lit(1))
-             .otherwise(F.lit(0))).cast("tinyint")
-    decoded = (F.when(F.col("c") == 2, F.lit("surge"))
-                .when(F.col("c") == 1, F.lit("active"))
-                .otherwise(F.lit("idle")))
-    rows = (df.select("value_c", label.alias("old"), code.alias("c"))
-              .select("value_c", "old", decoded.alias("new"))
-              .collect())
-    for r in rows:
+    new = behavior_label(behavior_code(F.col("value_c")))
+    for r in df.select("value_c", label.alias("old"), new.alias("new")).collect():
         assert r.old == r.new, f"behavior label diverged for value_c={r.value_c}"
 
 
-def test_anchor_min_by_equivalence(spark):
-    """min_by(embedding, vec_id) must pick the same anchor vector as the
-    round-8 groupBy(min) + self-join formulation."""
-    data = [
-        (7, [1.0, 2.0], "a"), (3, [0.5, 0.25], "a"), (9, [4.0, 4.0], "a"),
-        (20, [1.0, 0.0], "b"), (11, [0.0, 1.0], "b"),
-        (5, [2.0, 2.0], "c"),
-    ]
-    emb = spark.createDataFrame(data, "vec_id long, embedding array<double>, label string")
+def test_with_zscore_bit_exact(spark):
+    """with_zscore must produce, bit for bit, the z-score of the expression
+    tree the oracle mirrors: per-type mean and E[x^2]-E[x]^2 variance from
+    exact integer sums, then IEEE-754 double ops, evaluated here in Python."""
+    data = [(1, "a", -12345), (2, "a", 0), (3, "a", 99999), (4, "a", 7),
+            (5, "b", 5000), (6, "b", 5001), (7, "c", 1), (8, "c", 250000), (9, "c", 3)]
+    ev = spark.createDataFrame(data, "event_id long, event_type string, value_c long")
+    got = {r.event_id: r.z for r in with_zscore(ev).collect()}
 
-    new = emb.groupBy("label").agg(
-        F.min("vec_id").alias("anchor_id"),
-        F.min_by("embedding", "vec_id").alias("anchor_vec"),
-    )
-    old = (emb.groupBy("label").agg(F.min("vec_id").alias("anchor_id"))
-              .join(emb.select(F.col("vec_id").alias("anchor_id"),
-                               F.col("embedding").alias("anchor_vec")), "anchor_id"))
-
-    n_rows = {r.label: (r.anchor_id, r.anchor_vec) for r in new.collect()}
-    o_rows = {r.label: (r.anchor_id, r.anchor_vec) for r in old.collect()}
-    assert n_rows == o_rows
+    expect = {}
+    for t in {t for _, t, _ in data}:
+        vs = [v for _, tt, v in data if tt == t]
+        n = float(len(vs))
+        mean_c = float(sum(vs)) / n
+        var_c = float(sum(v * v for v in vs)) / n - mean_c * mean_c
+        mu, sigma = mean_c / 100.0, math.sqrt(var_c) / 100.0
+        expect.update({i: (float(v) / 100.0 - mu) / sigma for i, tt, v in data if tt == t})
+    assert {i: z.hex() for i, z in got.items()} == {i: z.hex() for i, z in expect.items()}
 
 
 def test_anchor_two_step_hash_equivalence(spark):
-    """The r10 two-step anchor path (hash-agg min(vec_id) per label, then
-    broadcast-fetch the anchor row by vec_id) must return exactly the rows the
-    r09 min/min_by aggregation returned, for every label -- including labels
-    whose min vec_id is not globally minimal and single-row labels."""
+    """similarity_anchors (hash-agg min(vec_id) per label, then
+    broadcast-fetch the anchor row by vec_id) must return exactly the rows
+    of a min/min_by aggregation, for every label -- including labels whose
+    min vec_id is not globally minimal and single-row labels."""
     data = [
         (7, [1.0, 2.0], "a"), (3, [0.5, 0.25], "a"), (9, [4.0, 4.0], "a"),
         (20, [1.0, 0.0], "b"), (11, [0.0, 1.0], "b"),
@@ -218,12 +208,6 @@ def test_anchor_two_step_hash_equivalence(spark):
         F.min("vec_id").alias("anchor_id"),
         F.min_by("embedding", "vec_id").alias("anchor_vec"),
     )
-    ids = (emb.select("vec_id", "label")
-              .groupBy("label").agg(F.min("vec_id").alias("anchor_id")))
-    new = (emb.join(F.broadcast(ids.select("anchor_id")),
-                    emb.vec_id == F.col("anchor_id"))
-              .select("label", "anchor_id", F.col("embedding").alias("anchor_vec")))
-
     o_rows = {r.label: (r.anchor_id, r.anchor_vec) for r in old.collect()}
-    n_rows = {r.label: (r.anchor_id, r.anchor_vec) for r in new.collect()}
+    n_rows = {r.label: (r.anchor_id, r.anchor_vec) for r in similarity_anchors(emb).collect()}
     assert n_rows == o_rows

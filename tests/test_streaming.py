@@ -1,9 +1,13 @@
 """Streaming operators: windowed counts and dedup driven to completion on the
-sf0.001 events data; aggregates cross-checked against the batch analog."""
+sf0.001 events data; results cross-checked against the batch data."""
 
+import shutil
+
+import pytest
 from pyspark.sql import functions as F
 
 from engine import streaming
+from engine.queries import _cents
 from tests.conftest import SF_SMOKE
 
 
@@ -17,38 +21,27 @@ def test_windowed_counts_matches_batch(spark):
 
     batch = (spark.read.parquet(f"{SF_SMOKE}/events.parquet")
              .withColumn("ts", F.col("ts").cast("timestamp")))
-    value_c = F.round(F.col("value") * 100, 0).cast("long")
     expect = {(r["window"].start, r.event_type): (r.n, r.s)
               for r in (batch.groupBy(F.window("ts", "6 hours"), "event_type")
-                        .agg(F.count(F.lit(1)).alias("n"), F.sum(value_c).alias("s"))
+                        .agg(F.count(F.lit(1)).alias("n"), F.sum(_cents("value")).alias("s"))
                         .collect())}
     assert got == expect
 
 
-def test_stream_dedup(spark):
-    stream = streaming.read_event_stream(spark, SF_SMOKE)
-    table = streaming.run_to_memory(streaming.stream_dedup(stream))
-    n = spark.table(table).count()
-    n_batch = spark.read.parquet(f"{SF_SMOKE}/events.parquet").count()
-    assert n == n_batch  # event_ids are unique -> dedup is a no-op pass-through
-
-
-def test_stream_dedup_rocksdb_statestore(spark):
-    """The production state-store config (r10): stream_dedup must produce the
-    same result with the RocksDB provider that SPARK_GRAFT_STATESTORE=rocksdb
-    selects in engine.session."""
+@pytest.mark.parametrize("provider", ["HDFSBackedStateStoreProvider", "RocksDBStateStoreProvider"],
+                         ids=["hdfs", "rocksdb"])
+def test_stream_dedup(spark, tmp_path, provider):
+    """A stream of two copies of the sf0.001 events dedups to the source rows,
+    under the default state store and under RocksDB."""
+    for copy in ("a", "b"):
+        shutil.copy(f"{SF_SMOKE}/events.parquet", tmp_path / f"events_{copy}.parquet")
     key = "spark.sql.streaming.stateStore.providerClass"
-    provider = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    old = spark.conf.get(key, None)
+    old = spark.conf.get(key)
+    spark.conf.set(key, f"org.apache.spark.sql.execution.streaming.state.{provider}")
     try:
-        spark.conf.set(key, provider)
-        stream = streaming.read_event_stream(spark, SF_SMOKE)
+        stream = streaming.read_event_stream(spark, str(tmp_path))
         table = streaming.run_to_memory(streaming.stream_dedup(stream))
-        n = spark.table(table).count()
     finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
-    n_batch = spark.read.parquet(f"{SF_SMOKE}/events.parquet").count()
-    assert n == n_batch
+        spark.conf.set(key, old)
+    n_source = spark.read.parquet(f"{SF_SMOKE}/events.parquet").count()
+    assert spark.table(table).count() == n_source

@@ -21,8 +21,11 @@ def run_once(repo: str, cpus: int, sf_dir: str) -> dict:
     t0 = time.time()
     out = subprocess.run([sys.executable, os.path.join(repo, "bench.py")],
                          capture_output=True, text=True, env=env, cwd=repo)
-    line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
-    rec = json.loads(line)
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
+    if not lines:
+        raise RuntimeError(f"bench.py in {repo} printed no JSON line (exit {out.returncode}); "
+                           f"stderr tail:\n{out.stderr[-4000:]}")
+    rec = json.loads(lines[-1])
     rec["side"] = repo
     rec["wall_s"] = round(time.time() - t0, 1)
     rec["t"] = round(t0, 1)

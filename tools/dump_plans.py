@@ -11,7 +11,9 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if REPO not in sys.path:
+    sys.path.insert(0, REPO)
 
 from engine.queries import QUERIES  # noqa: E402
 from engine.session import build_session  # noqa: E402
